@@ -50,28 +50,11 @@ def loop_execution(
     spark,
     n_rows: int,
     rows_per_partition: int = LOOP_ROWS_PER_PARTITION,
-    auto_broadcast_off: bool = False,
 ):
     """Run an iterative loop body with AQE off and a shuffle width derived
     from ``n_rows`` (the loop's dominant materialized row count), restoring
     the session's settings on every exit path. Yields the derived width so
-    the caller can pin explicit repartitions to the same number.
-
-    ``auto_broadcast_off=True`` additionally disables auto-broadcast
-    inside the posture, forcing the loop's joins to the sort-merge shape
-    they take at cluster scale (where no side fits a broadcast). This was
-    MEASURED as a net LOSS on every loop family at bench scale and is
-    therefore off by default (r14 interleaved A/B, best-of-3): it does
-    cut one broadcast-BUILD job per round (q100's CC 49→37 jobs, q72
-    21→18, q240's peel 28→20), but the sort-merge rounds pay exchange +
-    sort stages of the node-sized side per round — and for the k-core
-    peel four exchanges of the EDGE side (115 vs 66 stages) — which cost
-    more wall than the build jobs they replace (q100 6.56s on vs 7.40s
-    off; q72 2.08 vs 2.71; q240 2.55 vs 3.17; q242 the one wash at 2.37
-    vs 2.31). At 100 TB the planner sizes the loop sides past any
-    threshold and picks sort-merge on its own, so the default changes
-    nothing at scale; the knob exists for operators whose cached big
-    side should never be auto-broadcast (none currently opt in)."""
+    the caller can pin explicit repartitions to the same number."""
     conf = spark.conf
     loop_parts = max(1, -(-int(n_rows) // int(rows_per_partition)))
     old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
@@ -79,17 +62,13 @@ def loop_execution(
         "spark.sql.shuffle.partitions",
         str(spark.sparkContext.defaultParallelism),
     )
-    old_bc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try:
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if auto_broadcast_off:
-            conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         yield loop_parts
     finally:
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.shuffle.partitions", old_sp)
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
 def bounded_tail(spark, head, build, head_pins=()):

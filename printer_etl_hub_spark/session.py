@@ -11,7 +11,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_SHUFFLE_PARTITIONS = int(CPUS)
+
+#: Runtime-settable confs: ``get_spark`` builds its session with them and
+#: ``apply_runtime_conf`` sets them on a session created elsewhere.
+RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # Naive parquet timestamp[us] must come back as TIMESTAMP, not
+    # TIMESTAMP_NTZ: NTZ breaks withWatermark (event time requires
+    # TIMESTAMP) and long-casts, and the UTC session makes the two
+    # representations value-identical anyway.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def get_spark(
@@ -26,25 +41,16 @@ def get_spark(
     skew-split, partition coalescing), Arrow keeps the Python boundary
     vectorized, and UTC session time keeps timestamp semantics engine-portable.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
-        SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+        SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{CPUS}]"))
         .appName(app_name)
         # Cluster sizing: shuffle.partitions tracks local cores here; on a
         # real deployment raise spark.sql.adaptive.coalescePartitions.
         # initialPartitionNum (e.g. 2-4x total cores) and let AQE coalesce —
         # measured ~35% overhead at local test sizes, so not the default.
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Naive parquet timestamp[us] must come back as TIMESTAMP, not
-        # TIMESTAMP_NTZ: NTZ breaks withWatermark (event time requires
-        # TIMESTAMP) and long-casts, and the UTC session makes the two
-        # representations value-identical anyway.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
@@ -75,16 +81,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     must be UTC to line up with the (UTC-naive) DuckDB oracle, and AQE is a
     pure win at any scale.
     """
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        # Runtime-settable: keeps naive parquet timestamps as TIMESTAMP
-        # (not NTZ) even on the driver's own session — NTZ would break
-        # watermarks and epoch casts downstream.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-    }.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

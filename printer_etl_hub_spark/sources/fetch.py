@@ -19,7 +19,6 @@ in-flight connections.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -28,6 +27,45 @@ from pyspark.sql import functions as F
 
 #: transport: (ip, opts) -> payload dict. Raise on failure.
 Transport = Callable[[str, dict], dict]
+
+
+def probe(
+    df: DataFrame,
+    transport: Transport,
+    schema: str,
+    offline_default: dict,
+    opts: dict | None = None,
+    max_retries: int = 2,
+) -> DataFrame:
+    """Run ``transport`` once per row of ``df``'s ``ip`` column,
+    partition-parallel, Arrow-batched — the one probe loop behind both the
+    batch fetch and the streaming poll.
+
+    Each partition gets its own copy of ``opts`` as the transport's session
+    state. A probe that still raises after ``max_retries`` retries yields
+    ``offline_default`` (the row never drops). Every input column is carried
+    through; payload keys win over input columns of the same name, and
+    ``schema`` aligns the output to its columns by name.
+    """
+    opts = dict(opts or {})
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        session_opts = dict(opts)  # per-partition "session" (reused across rows)
+        for pdf in batches:
+            payloads = []
+            for ip in pdf["ip"]:
+                payload = None
+                for _ in range(max_retries + 1):
+                    try:
+                        payload = transport(ip, session_opts)
+                        break
+                    except Exception:
+                        continue
+                payloads.append(dict(offline_default) if payload is None else payload)
+            out = pd.DataFrame(payloads, index=pdf.index)
+            yield pd.concat([pdf.drop(columns=out.columns, errors="ignore"), out], axis=1)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def fetch_stage(
@@ -39,35 +77,14 @@ def fetch_stage(
     opts: dict | None = None,
     max_retries: int = 2,
 ) -> DataFrame:
-    """Run ``transport`` once per row, partition-parallel, Arrow-batched.
+    """Probe each distinct ``ip_col`` value once (see :func:`probe`).
 
-    Output schema is ``ip string, ok boolean, payload string`` + caller joins
-    / parses downstream, or a typed ``result_schema`` ("ip string, ..."):
-    the transport's dict is aligned to the schema columns by name.
-    Errors after ``max_retries`` yield ``offline_default`` (row never drops).
+    ``result_schema`` is typed ("ip string, ..."): the transport's dict is
+    aligned to the schema columns by name. Errors after ``max_retries``
+    yield ``offline_default`` (row never drops).
     """
-    opts = dict(opts or {})
     src = df.select(F.col(ip_col).cast("string").alias("ip")).distinct()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        session_opts = dict(opts)  # per-partition "session" (reused across rows)
-        for pdf in batches:
-            rows = []
-            for ip in pdf["ip"]:
-                payload = None
-                for _ in range(max_retries + 1):
-                    try:
-                        payload = transport(ip, session_opts)
-                        break
-                    except Exception:
-                        continue
-                if payload is None:
-                    payload = dict(offline_default)
-                payload = {"ip": ip, **payload}
-                rows.append(payload)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(run, schema=result_schema)
+    return probe(src, transport, result_schema, offline_default, opts, max_retries)
 
 
 def probe_per_group(

@@ -4,8 +4,8 @@ The reference's operating model (SURVEY.md §2.7): every pipeline run is one
 micro-batch that re-polls the whole fleet and overwrites per-device state.
 Structured Streaming expresses the schedule natively — a ``rate`` source
 emits one tick per poll interval; each tick fans out to the (broadcast)
-fleet inventory; the fetch stage (`sources/fetch.py` semantics, inlined
-here for the streaming plan) probes devices partition-parallel with
+fleet inventory; the same probe loop as the batch fetch stage
+(`sources/fetch.py::probe`) probes devices partition-parallel with
 offline-defaults; results flow to the last-value-wins state sink
 (`streaming/sink.py`) or any downstream windowed aggregation.
 
@@ -22,13 +22,10 @@ cluster has, not one device at a time.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-Transport = Callable[[str, dict], dict]
+from ..sources.fetch import Transport, probe
 
 
 def poll_ticks(spark: SparkSession, interval_seconds: int = 60) -> DataFrame:
@@ -60,26 +57,14 @@ def fleet_poll_stream(
     """tick × fleet → partition-parallel probe → typed result stream.
 
     ``fleet`` is a static (batch) DataFrame — Spark broadcasts it into every
-    micro-batch (stream-static join). The probe stage mirrors
-    sources/fetch.py: retries, never drops a row, offline default on error.
+    micro-batch (stream-static join). The probe is sources/fetch.py's:
+    retries, never drops a row, offline default on error. Output rows are
+    the probe result plus the tick's ``poll_ts``.
     """
-    fanout = ticks.crossJoin(F.broadcast(fleet.select(F.col(ip_col).alias("ip"))))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        session_opts: dict = {}
-        for pdf in batches:
-            rows = []
-            for poll_ts, ip in zip(pdf["poll_ts"], pdf["ip"]):
-                payload = None
-                for _ in range(max_retries + 1):
-                    try:
-                        payload = transport(ip, session_opts)
-                        break
-                    except Exception:
-                        continue
-                if payload is None:
-                    payload = dict(offline_default)
-                rows.append({"poll_ts": poll_ts, "ip": ip, **payload})
-            yield pd.DataFrame(rows)
-
-    return fanout.mapInPandas(run, schema=f"poll_ts timestamp, {result_schema}")
+    fanout = ticks.select("poll_ts").crossJoin(
+        F.broadcast(fleet.select(F.col(ip_col).alias("ip")))
+    )
+    return probe(
+        fanout, transport, f"poll_ts timestamp, {result_schema}", offline_default,
+        max_retries=max_retries,
+    )

@@ -7,13 +7,14 @@ Spark-shaped equivalent is a keyed state table upserted per micro-batch via
 state, write a NEW version directory, then flip a pointer file — the same
 atomic-commit idea, but versioned (time-travel for free) and distributed.
 
-On a Delta/Iceberg-equipped cluster ``_merge_batch`` becomes a one-line
-``MERGE INTO``; the plan shape (latest-per-key reduce + key-equi outer
-merge) is identical. Parquet-dir versioning keeps this container-runnable.
+On a Delta/Iceberg-equipped cluster ``merge_last_state`` becomes a
+one-line ``MERGE INTO``; the result (latest row per key over state ∪
+batch) is identical. Parquet-dir versioning keeps this container-runnable.
 
-Scale notes: state size is O(|keys|); the merge shuffles only on the key;
-the batch side is reduced to one row per key BEFORE touching the (large)
-state table.
+Scale notes: state size is O(|keys|); the merge is ONE keyed reduce over
+state ∪ batch, so it shuffles once, only on the key. ``max_by`` aggregates
+partially on the map side, so each input partition — batch ones included —
+is already down to one row per key before the shuffle.
 """
 
 from __future__ import annotations
@@ -90,21 +91,13 @@ def merge_last_state(
     _, last_bid = _read_pointer(state_dir)
     if last_bid is not None and last_bid == batch_id:
         return  # this batch's effect is already committed — replay no-op
-    latest = (
-        batch_df.groupBy(key)
+    prev = read_state(spark, state_dir)
+    rows = batch_df if prev is None else prev.unionByName(batch_df)
+    merged = (
+        rows.groupBy(key)
         .agg(F.max_by(F.struct("*"), F.col(ts_col)).alias("_r"))
         .select("_r.*")
     )
-    prev = read_state(spark, state_dir)
-    if prev is not None:
-        merged = (
-            prev.unionByName(latest)
-            .groupBy(key)
-            .agg(F.max_by(F.struct("*"), F.col(ts_col)).alias("_r"))
-            .select("_r.*")
-        )
-    else:
-        merged = latest
     version = _next_version(state_dir)
     merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
     _commit_pointer(state_dir, version, batch_id)
@@ -175,11 +168,7 @@ def vacuum(state_dir: str, *, keep_last: int = 2) -> list[str]:
     history is readable until vacuumed — this is the vacuum.)"""
     import shutil
 
-    ptr = os.path.join(state_dir, _POINTER)
-    current = None
-    if os.path.exists(ptr):
-        with open(ptr, encoding="utf-8") as fh:
-            current = fh.read().strip()
+    current, _ = _read_pointer(state_dir)
     versions = sorted(
         d for d in os.listdir(state_dir) if d.startswith("v") and d[1:].isdigit()
     )

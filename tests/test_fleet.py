@@ -135,11 +135,11 @@ def test_enrich_locations_and_descriptions(spark):
 
 def test_reference_lifecycle_end_to_end(spark, tmp_path):
     """The reference's full run (SURVEY §3.1) as ONE Spark pipeline:
-    sheet ingest (fuzzy headers) → fleet poll (custom DataSource) →
+    sheet ingest (fuzzy headers) → fleet poll (fetch stage) →
     bad-IP filter + enrichment join → report projection → canonical JSON
     export → reload round-trip."""
     from printer_etl_hub_spark.functions.normalize import is_bad_value
-    from printer_etl_hub_spark.sources.devicepoll_source import register
+    from printer_etl_hub_spark.sources.fetch import fetch_stage
     from printer_etl_hub_spark.sources.json_store import (
         load_printers_json,
         save_printers_json,
@@ -160,10 +160,18 @@ def test_reference_lifecycle_end_to_end(spark, tmp_path):
     good = printers.filter(~is_bad_value(F.col("Printer IP")))
     assert good.count() == 3
 
-    # 2. poll cycle via the devicepoll DataSource (reference §3.2 fetch)
-    register(spark)
-    ips = ",".join(r["Printer IP"] for r in good.select("Printer IP").collect())
-    poll = spark.read.format("devicepoll").option("fleet_ips", ips).load()
+    # 2. poll cycle through the fetch stage (reference §3.2 fetch) with a
+    #    deterministic transport; 10.9.0.2 never answers → offline default
+    def transport(ip, opts):
+        if ip == "10.9.0.2":
+            raise TimeoutError(ip)
+        return {"status": "online", "severity": "ok", "toner_pct": int(ip[-1]) * 10}
+
+    poll = fetch_stage(
+        good, "Printer IP", transport,
+        "ip string, status string, severity string, toner_pct int",
+        offline_default={"status": "offline", "severity": "critical", "toner_pct": 0},
+    )
 
     # 3. enrichment join + report projection (J-family + F5 dash default)
     report = (
@@ -178,8 +186,11 @@ def test_reference_lifecycle_end_to_end(spark, tmp_path):
         )
     )
     rows = {r.ID: r for r in report.collect()}
-    assert set(rows) == {"1", "2", "4"}
-    assert all(r.status in ("online", "offline") for r in rows.values())
+    assert {k: (r.status, r.severity, r.toner_pct) for k, r in rows.items()} == {
+        "1": ("online", "ok", 10),
+        "2": ("offline", "critical", 0),
+        "4": ("online", "ok", 40),
+    }
 
     # 4. canonical JSON export + reload (reference S4/S5 round-trip)
     out = report.withColumn("group", F.lit("Company_Grouped")).withColumn(

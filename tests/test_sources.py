@@ -46,59 +46,6 @@ def test_json_store_roundtrip(spark, tmp_path):
     assert data["Company_Grouped"][1]["Comment"] == "שבור"
 
 
-def test_devicepoll_batch_read(spark):
-    """Custom Python DataSource: one poll cycle, fleet-partitioned,
-    deterministic stub probes, offline-default rows present."""
-    from printer_etl_hub_spark.sources.devicepoll_source import register
-
-    register(spark)
-    ips = ",".join(f"10.0.0.{i}" for i in range(1, 41))
-    df = (
-        spark.read.format("devicepoll")
-        .option("fleet_ips", ips)
-        .option("num_partitions", 4)
-        .load()
-    )
-    rows = df.collect()
-    assert len(rows) == 40
-    assert {r.ip for r in rows} == {f"10.0.0.{i}" for i in range(1, 41)}
-    # deterministic: a second read yields identical rows
-    rows2 = spark.read.format("devicepoll").option("fleet_ips", ips).load().collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
-    offline = [r for r in rows if r.status == "offline"]
-    assert all(r.severity == "critical" and r.toner_pct == 0 for r in offline)
-
-
-def test_devicepoll_stream_cycles(spark, tmp_path):
-    """Streaming read: each micro-batch is one full-fleet poll cycle;
-    max_cycles bounds the offset so the query drains."""
-    from pyspark.sql import functions as F
-
-    from printer_etl_hub_spark.sources.devicepoll_source import register
-
-    register(spark)
-    ips = ",".join(f"10.1.0.{i}" for i in range(1, 11))
-    stream = (
-        spark.readStream.format("devicepoll")
-        .option("fleet_ips", ips)
-        .option("max_cycles", 3)
-        .load()
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("poll_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT cycle, count(*) AS n FROM poll_out GROUP BY cycle").collect()
-    finally:
-        q.stop()
-    assert {(r.cycle, r.n) for r in got} == {(1, 10), (2, 10), (3, 10)}
-
-
 GRID_HTML = """
 <div class="x-grid3">
  <div class="x-grid3-header"><div class="x-grid3-row">

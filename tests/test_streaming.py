@@ -218,10 +218,12 @@ def test_device_state_sink_last_value_wins(spark, events, tmp_path):
 
 def test_fleet_poll_stream(spark, tmp_path):
     """Poll-cycle composition: injected tick stream × broadcast fleet →
-    partition-parallel probe with offline defaults → one typed row per
-    (cycle, device), across two micro-batches."""
+    partition-parallel probe with retries and offline defaults → one typed
+    row per (cycle, device), across two micro-batches. Each tick's rows are
+    exactly the batch fetch stage's rows plus the tick's ``poll_ts``."""
     import datetime as dt
 
+    from printer_etl_hub_spark.sources.fetch import fetch_stage
     from printer_etl_hub_spark.streaming.poll import fleet_poll_stream
 
     fleet = spark.createDataFrame(
@@ -229,21 +231,21 @@ def test_fleet_poll_stream(spark, tmp_path):
     )
 
     def transport(ip, opts):
-        if ip.endswith("3"):
-            raise TimeoutError("unreachable")
+        attempt = opts[ip] = opts.get(ip, 0) + 1
+        if ip.endswith("3") or (ip.endswith("2") and attempt == 1):
+            raise TimeoutError("unreachable")  # .3 never answers, .2 on retry
         return {"status": "online", "pct": int(ip[-1]) * 10}
 
+    schema = "ip string, status string, pct int"
+    offline = {"status": "offline", "pct": None}
     src = str(tmp_path / "ticks")
     t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
     spark.createDataFrame([(t0, 0)], "poll_ts timestamp, cycle_ts long") \
         .coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    ticks = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = fleet_poll_stream(
-        ticks, fleet, "ip", transport,
-        "ip string, status string, pct int",
-        offline_default={"status": "offline", "pct": None},
-    )
+    tick_schema = spark.read.parquet(src).schema
+    ticks = spark.readStream.schema(tick_schema).option("maxFilesPerTrigger", 1).parquet(src)
+    out = fleet_poll_stream(ticks, fleet, "ip", transport, schema, offline_default=offline)
+    assert out.columns == ["poll_ts", "ip", "status", "pct"]  # no cycle_ts
     q = out.writeStream.outputMode("append").format("memory").queryName("poll_out").start()
     try:
         q.processAllAvailable()
@@ -257,8 +259,11 @@ def test_fleet_poll_stream(spark, tmp_path):
     assert len(rows) == 6  # 2 cycles x 3 devices, no dropped rows
     by = {(r["poll_ts"], r["ip"]): (r["status"], r["pct"]) for r in rows}
     assert by[(t0, "10.0.0.1")] == ("online", 10)
+    assert by[(t0, "10.0.0.2")] == ("online", 20)  # answered on the retry
     assert by[(t0, "10.0.0.3")] == ("offline", None)
-    assert by[(t1, "10.0.0.2")] == ("online", 20)
+    want = {tuple(r) for r in fetch_stage(fleet, "ip", transport, schema, offline).collect()}
+    for t in (t0, t1):
+        assert {(ip, *v) for (ts, ip), v in by.items() if ts == t} == want
 
 
 def test_stream_stream_join_equals_batch(spark, events, tmp_path):
@@ -448,6 +453,10 @@ def test_vacuum_keeps_current_and_recent(spark, events, tmp_path):
     left = sorted(d for d in os.listdir(state) if d.startswith("v"))
     assert left == versions[2:]
     # current still readable after the sweep
+    assert read_state(spark, state).count() > 0
+    # keep_last=0 still keeps the committed version named by the pointer
+    assert vacuum(state, keep_last=0) == versions[2:3]
+    assert sorted(d for d in os.listdir(state) if d.startswith("v")) == versions[3:]
     assert read_state(spark, state).count() > 0
 
 
